@@ -1,21 +1,171 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.debug._
 
-/** Dumps physical plans for the load-bearing queries so the scale
-  * properties are reviewable: filter pushdown reaching the parquet
-  * scan, column pruning in ReadSchema, broadcast join strategy for the
-  * allow-list, whole-stage codegen spans, and the absence of any
-  * raw-payload shuffle in the extraction pipeline.
+/** The diagnostics entry point — measurement lives here, next to (not
+  * inside) the frozen `Bench`/`Verify` mains:
+  *
+  * {{{
+  * Diag profile <sfDir> <prefix>...                   cold-state timing + stage table per query
+  * Diag plans   <sfDir> <outDir> <suffix> <prefix>... explain("formatted") → <outDir>/<query>_<suffix>.txt
+  * Diag audit   <sfDir>                               physical-plan audit (PLANS.md)
+  * Diag host                                          5-second host probe; exit 0 clean, 1 contended
+  * }}}
+  *
+  * Query names match by prefix over [[SparkEntry.queries]]. The Spark
+  * subcommands share one [[Bench.session]] at `SPARK_GRAFT_CPUS`
+  * (default 32) and Bench's cold-state sweep before every query.
   */
-object PlanAudit {
-  def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Bench.session("8")
-    spark.sparkContext.setLogLevel("ERROR")
+object Diag {
 
-    def show(name: String, note: String)(dfb: => org.apache.spark.sql.DataFrame): Unit = {
+  def main(args: Array[String]): Unit = args.toList match {
+    case "profile" :: sfDir :: prefixes =>
+      withSession(profile(_, sfDir, matching(prefixes)))
+    case "plans" :: sfDir :: outDir :: suffix :: prefixes =>
+      withSession(plans(_, sfDir, outDir, suffix, matching(prefixes)))
+    case "audit" :: sfDir :: _ => withSession(audit(_, sfDir))
+    case "host" :: _ => sys.exit(if (host()) 0 else 1)
+    case _ =>
+      System.err.println("usage: graft.Diag profile <sfDir> <prefix>... | " +
+        "plans <sfDir> <outDir> <suffix> <prefix>... | audit <sfDir> | host")
+      sys.exit(2)
+  }
+
+  private def withSession(body: SparkSession => Unit): Unit = {
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    spark.sparkContext.setLogLevel("ERROR")
+    try body(spark) finally spark.stop()
+  }
+
+  private def matching(prefixes: Seq[String]): Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filter(n => prefixes.exists(n.startsWith))
+
+  /** Bench's per-rep cold state: drop the dedup caches, the SQL cache
+    * and every persisted RDD, so a query never reads a previous one's
+    * persisted relation. */
+  private def coldState(spark: SparkSession): Unit =
+    try {
+      graft.functions.Dedup.releaseCaches()
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    } catch { case _: Throwable => () }
+
+  // ---- profile ----------------------------------------------------------
+
+  private final class StageRec(
+      var name: String = "",
+      var submitted: Long = 0L,
+      var completed: Long = 0L,
+      var taskMs: Long = 0L,
+      var gcMs: Long = 0L,
+      var tasks: Int = 0,
+      var shufReadB: Long = 0L,
+      var shufWriteB: Long = 0L,
+      var inputB: Long = 0L)
+
+  /** Per-stage wall, task time, GC, task count and I/O bytes of the
+    * jobs run inside [[record]] (the UI is disabled in these sessions). */
+  private final class StageRecorder extends SparkListener {
+    private val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRec]()
+    @volatile private var on = false
+
+    def record[T](body: => T): T = {
+      stages.clear(); on = true
+      try body finally on = false
+    }
+
+    /** Completed stages, longest wall first. */
+    def completed: Seq[StageRec] = {
+      import scala.jdk.CollectionConverters._
+      stages.values.asScala.toSeq.filter(_.completed > 0)
+        .sortBy(r => -(r.completed - r.submitted))
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (on) {
+        val r = stages.computeIfAbsent(e.stageInfo.stageId, _ => new StageRec)
+        // the RDD scope chain identifies the operator (callsite name is
+        // always the same lambda); keep the distinct scope names in order
+        r.name = e.stageInfo.rddInfos.map(_.name).distinct.mkString(">")
+        r.submitted = System.currentTimeMillis()
+      }
+    // not gated on `on`: the listener bus is asynchronous, so a recorded
+    // stage's last events may arrive after record() has returned
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val r = stages.get(e.stageInfo.stageId)
+      if (r != null) r.completed = System.currentTimeMillis()
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val r = stages.get(e.stageId)
+      if (r != null && e.taskMetrics != null) r.synchronized {
+        r.tasks += 1
+        r.taskMs += e.taskMetrics.executorRunTime
+        r.gcMs += e.taskMetrics.jvmGCTime
+        r.shufReadB += e.taskMetrics.shuffleReadMetrics.totalBytesRead
+        r.shufWriteB += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        r.inputB += e.taskMetrics.inputMetrics.bytesRead
+      }
+    }
+  }
+
+  /** Bench's rep protocol per query — cold state before each rep,
+    * count() as the action, one warmup then two timed reps — printing
+    * the min/reps line and the slowest stages of the last rep. */
+  private def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    val rec = new StageRecorder
+    spark.sparkContext.addSparkListener(rec)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      def once(recorded: Boolean): Double = {
+        coldState(spark)
+        val t0 = System.nanoTime()
+        if (recorded) rec.record(fn(spark, sfDir).count()) else fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      once(recorded = false) // warmup: JIT + codegen
+      val r1 = once(recorded = false)
+      val r2 = once(recorded = true) // stage table comes from the last rep
+      println(f"\n== $name: min ${math.min(r1, r2)}%.3f s  reps=[$r1%.3f, $r2%.3f]")
+      val recs = rec.completed
+      val totalWall = recs.map(r => r.completed - r.submitted).sum
+      println(f"   stages=${recs.size} stage-wall-sum=${totalWall}ms (overlap possible)")
+      recs.take(12).foreach { r =>
+        println(f"   ${r.completed - r.submitted}%6dms wall | task ${r.taskMs}%6dms gc ${r.gcMs}%4dms | ${r.tasks}%3d tasks | in ${r.inputB / 1024}%6dK sr ${r.shufReadB / 1024}%6dK sw ${r.shufWriteB / 1024}%6dK | ${r.name.take(90)}")
+      }
+    }
+  }
+
+  // ---- plans ------------------------------------------------------------
+
+  /** `.explain("formatted")` of each query, planned from cold state so
+    * the file shows the cold-plan shape, not an InMemoryTableScan over a
+    * previous query's persisted relation. */
+  private def plans(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      coldState(spark)
+      val text = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
+        text.getBytes(StandardCharsets.UTF_8))
+      println(s"wrote $outDir/${name}_$suffix.txt (${text.length} chars)")
+    }
+  }
+
+  // ---- audit ------------------------------------------------------------
+
+  /** Prints PLANS.md: physical plans of the load-bearing queries with
+    * their review criteria — filter pushdown reaching the parquet scan,
+    * column pruning in ReadSchema, broadcast join strategy for the
+    * allow-list, whole-stage codegen spans, and no raw-payload shuffle
+    * in the extraction pipeline. */
+  private def audit(spark: SparkSession, dir: String): Unit = {
+    def show(name: String, note: String)(dfb: => DataFrame): Unit = {
       println(s"\n## $name\n\n$note\n\n```")
       println(dfb.queryExecution.executedPlan.toString.take(6000))
       println("```")
@@ -30,7 +180,7 @@ object PlanAudit {
 
     show("extraction pipeline (q15 shape): map-side, no raw-payload exchange",
       "There must be NO Exchange between the transcript source and the " +
-      "MapPartitions extraction — the payload column is never shuffled.") {
+      "ExtractAll Project — the payload column is never shuffled.") {
       SparkEntry.queries("q15_extract_pipeline")(spark, dir)
     }
 
@@ -125,7 +275,7 @@ object PlanAudit {
           "q85_cms_counts", "q88_hll_distinct",
           "q90_pagerank", "q92_containment",
           "q96_filter_ablation")) {
-        spark.sharedState.cacheManager.clearCache()
+        coldState(spark)
         val df = SparkEntry.queries(q)(spark, dir)
         // collect() runs df's OWN QueryExecution (count() would build a
         // new one and leave this instance's metrics unset outside the
@@ -136,7 +286,7 @@ object PlanAudit {
           f.metrics.get("numOutputRows").map(_.value).getOrElse(-1L))
         println(s"| $q | ${scans.size} | ${rows.mkString(",")} |")
       }
-      spark.sharedState.cacheManager.clearCache()
+      coldState(spark)
     }
 
     // ---- AQE skew-join evidence (SURVEY §4.2) --------------------------
@@ -195,7 +345,6 @@ object PlanAudit {
     // replaced embedded nCentroids × dim literals (a multi-MB plan that
     // collapsed analyzer/codegen well before 10⁴ cells).
     {
-      import org.apache.spark.sql.functions._
       val nCents = 10000
       val dim = 16
       val vecs = spark.range(0, 2000).select(col("id").cast("int").as("vec_id"),
@@ -215,7 +364,6 @@ object PlanAudit {
       println(planStr.take(3000))
       println("```")
     }
-    spark.stop()
   }
 
   /** All FileSourceScanExec nodes reachable from `plan`, descending
@@ -246,5 +394,26 @@ object PlanAudit {
     }
     walk(plan)
     scans.toSeq
+  }
+
+  // ---- host -------------------------------------------------------------
+
+  /** 5-second host-cleanliness probe: medians of Bench's two fixed-work
+    * calibration kernels (register-bound CPU, DRAM-streaming memory)
+    * against Bench's noise-verdict gates (clean-host reference ~48 ms /
+    * ~14 ms) — the go/no-go check before a timing-sensitive run on a
+    * shared host, where multi-minute DRAM-contention windows inflate
+    * bandwidth-bound work 4×+ while CPU probes stay flat. Scriptable:
+    * `until MAIN=graft.Diag tools/run_verify.sh host; do sleep 90; done`. */
+  private def host(): Boolean = {
+    // JIT warmup, then 9 samples of each
+    Bench.calibrationProbe(); Bench.calibrationProbe()
+    Bench.memCalibrationProbe(); Bench.memCalibrationProbe()
+    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    val cpu = med((1 to 9).map(_ => Bench.calibrationProbe()))
+    val mem = med((1 to 9).map(_ => Bench.memCalibrationProbe()))
+    val clean = cpu <= 60.0 && mem <= 18.0
+    println(f"""{"cpu_probe_med_ms":$cpu%.1f,"mem_probe_med_ms":$mem%.1f,"clean":$clean}""")
+    clean
   }
 }

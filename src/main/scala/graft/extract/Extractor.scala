@@ -5,9 +5,9 @@ package graft.extract
   * (S3ItemProcessor.java:62-78) — where the reference copies a PDF
   * object, we extract the embedded payload's main content.
   *
-  * Pure function of the input string; instantiate nothing per row —
-  * designed to be called from `mapPartitions` so any future stateful
-  * parser setup is amortized per partition.
+  * Pure function of the input string; instantiates nothing per row and
+  * holds no per-partition state, so the map-side `ExtractAll`
+  * expression calls it row by row.
   */
 object Extractor {
 
@@ -21,7 +21,7 @@ object Extractor {
         Result(kind, blocks.map(_._2.text).mkString("\n"), blocks.length)
       case PayloadSniffer.Pdf =>
         val spans = PdfSpans.spans(payload)
-        Result(kind, PdfSpans.extractText(payload), spans.length)
+        Result(kind, PdfSpans.layoutText(spans), spans.length)
       case _ =>
         // plain text: identity modulo outer trim (frozen rule)
         val t = if (payload == null) "" else payload.trim

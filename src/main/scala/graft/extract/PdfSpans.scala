@@ -49,10 +49,13 @@ object PdfSpans {
       .map(_._1).toVector
   }
 
-  /** Layout-ordered plain text: spans on the same baseline (same y)
-    * joined by a single space; baselines joined by '\n'. Frozen. */
-  def extractText(pdf: String): String = {
-    val ss = spans(pdf)
+  /** Layout-ordered plain text of `pdf`: [[layoutText]] of its [[spans]]. */
+  def extractText(pdf: String): String = layoutText(spans(pdf))
+
+  /** Plain text of spans already in layout order: spans on the same
+    * baseline (same y) joined by a single space; baselines joined by
+    * '\n'. Frozen. */
+  def layoutText(ss: Vector[PdfSpan]): String = {
     if (ss.isEmpty) return ""
     val sb = new StringBuilder
     var prevY = ss.head.y

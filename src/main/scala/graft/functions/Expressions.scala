@@ -629,8 +629,9 @@ case class MinhashMd5Sig(child: Expression, k: Int) extends UnaryExpression {
 }
 
 /** Native word-n-gram generator over an `array<string>` token column —
-  * see [[TextKernels.wordNgrams]]. Null-propagating (the HOF tree it
-  * replaces yields NULL on NULL input). */
+  * see [[TextKernels.wordNgrams]]. NOT null-propagating: NULL input →
+  * `[""]`, matching the legacy HOF tree it replaces (whose
+  * greatest()-null-skip turns a NULL token array into one empty gram). */
 case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression {
   import org.apache.spark.sql.types._
@@ -672,8 +673,9 @@ case class WordNgrams(child: Expression, n: Int, distinct: Boolean)
 }
 
 /** Native fused n-gram + FNV-1a hasher over an `array<string>` token
-  * column — see [[TextKernels.hashedWordNgrams]]. Null-propagating,
-  * like the `arrayFnv1a64(shinglesFromTokens(...))` pair it replaces. */
+  * column — see [[TextKernels.hashedWordNgrams]]. NOT null-propagating:
+  * NULL input → `[fnv1a64("")]`, matching the legacy
+  * `arrayFnv1a64(shinglesFromTokens(...))` pair it replaces over `[""]`. */
 case class HashedWordNgrams(child: Expression, n: Int, distinct: Boolean)
     extends UnaryExpression {
   import org.apache.spark.sql.types._

@@ -8,7 +8,7 @@ import graft.table.{CheckpointStore, SnapshotTable}
 /** End-to-end checkpointed extraction job (SURVEY.md §3.1):
   *
   *   read watermark → ingest selection → [chunk by ts range] →
-  *   salted repartition → mapPartitions extraction →
+  *   map-side extraction → salted write repartition →
   *   snapshot-commit partitioned output → lineage + metrics →
   *   advance watermark.
   *

@@ -28,7 +28,7 @@ class PlanInvariantsSpec extends SparkSpec {
 
   /** Every node reachable from `plan`, descending through AQE stages,
     * reused exchanges, and InMemoryRelation build plans — the same
-    * descent as [[PlanAudit.distinctFileScans]], generalized. */
+    * descent as [[Diag.distinctFileScans]], generalized. */
   private def walkAll(plan: SparkPlan): Seq[SparkPlan] = {
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
@@ -109,7 +109,7 @@ class PlanInvariantsSpec extends SparkSpec {
         "q92_containment", "q96_filter_ablation")) {
       val df = fresh(q)
       df.collect()
-      val scans = PlanAudit.distinctFileScans(df.queryExecution.executedPlan)
+      val scans = Diag.distinctFileScans(df.queryExecution.executedPlan)
       assert(scans.size == 1,
         s"$q: expected exactly 1 distinct FileScan, found ${scans.size} — " +
           "a multi-consumer subtree is re-reading the corpus instead of " +
@@ -130,7 +130,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // broke and the eval corpus is being re-read.
     val df = fresh("q87_bloom_decontaminate")
     df.collect()
-    val scans = PlanAudit.distinctFileScans(df.queryExecution.executedPlan)
+    val scans = Diag.distinctFileScans(df.queryExecution.executedPlan)
     assert(scans.size == 3,
       s"q87: expected 3 distinct FileScans (2 synthesis branches + 1 " +
         s"cached eval side), found ${scans.size}")

@@ -309,4 +309,16 @@ class TrainingOpsSpec extends SparkSpec {
     assert(e === Set((1L, 2L)))
     Dedup.releaseCaches()
   }
+
+  test("rareGramEdgesFrom: null ids in the gram relation emit no null-endpoint edge") {
+    import spark.implicits._
+    // gram 7 holds a null id beside x and y; gram 8 pairs a null id with
+    // z alone — collect_list drops the nulls, so only (x, y) survives
+    val grams = Seq[(String, Long)](
+      (null, 7L), ("x", 7L), ("y", 7L), (null, 8L), ("z", 8L))
+      .toDF("doc_id", "g")
+    val e = Corpus.rareGramEdgesFrom(grams, "doc_id", dfMin = 2, dfMax = 3)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(e === Set(("x", "y")))
+  }
 }
