@@ -53,7 +53,7 @@ object IngestApp {
       opts.getOrElse("format", "parquet"))
     val result = mode match {
       case "ingest" =>
-        ExtractionJob.run(spark, turns, table, system, mode,
+        ExtractionJob.run(spark, turns, table, system,
           overrideWatermark = opts.get("since"), nChunks = nChunks,
           salt = salt)
       case "delete" =>
@@ -66,8 +66,7 @@ object IngestApp {
         // rowsWritten in the status line = dropped doc count.
         import org.apache.spark.sql.functions._
         val tbl = new graft.table.SnapshotTable(table)
-        val hasData = tbl.currentSnapshotId.exists(tbl.dataPaths(_).nonEmpty)
-        if (!hasData) {
+        if (!tbl.hasData) {
           // a committed-but-empty table is an operationally normal
           // state (first run matched nothing) — a clean zero-drop run,
           // not an unresolved-column crash on the 0-column empty view
@@ -99,8 +98,7 @@ object IngestApp {
       // its failure mask the run's real status
       try {
         val tbl = new graft.table.SnapshotTable(table)
-        val hasData = tbl.currentSnapshotId.exists(tbl.dataPaths(_).nonEmpty)
-        if (hasData) {
+        if (tbl.hasData) {
           val id = tbl.compact(spark, Seq("year", "month", "day"),
             Map("run-after" -> result.snapshotIds.lastOption.getOrElse("")))
           System.err.println(s"[graft] compacted table to snapshot $id")

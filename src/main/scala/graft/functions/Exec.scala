@@ -33,10 +33,27 @@ object Exec {
       val spark = df.sparkSession
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(spark.conf.getOption(CheckpointDirKey)
-          .getOrElse(java.nio.file.Files
-            .createTempDirectory("graft-ckpt").toString))
+        sc.setCheckpointDir(checkpointDir(
+          spark.conf.getOption(CheckpointDirKey), sc.isLocal,
+          java.nio.file.Files.createTempDirectory("graft-ckpt").toString))
       df.checkpoint(eager)
+    }
+
+  /** Reliable-checkpoint directory for a session that has none: the
+    * [[CheckpointDirKey]] value, else `tempDir` — but only in local
+    * mode, where driver and executors share one disk. On a cluster a
+    * driver-local dir leaves each executor's checkpoint files on its own
+    * disk (Spark only logs a warning), so reads from other executors
+    * fail and the fault tolerance the flag promises is silently gone:
+    * fail fast instead. */
+  private[functions] def checkpointDir(configured: Option[String],
+      isLocal: Boolean, tempDir: => String): String =
+    configured.getOrElse {
+      if (isLocal) tempDir
+      else throw new IllegalStateException(
+        s"$ReliableCheckpointKey=true needs a distributed checkpoint " +
+          s"dir on a cluster: set $CheckpointDirKey or " +
+          "SparkContext.setCheckpointDir")
     }
 
   /** Fan a SMALL scan out to the session's parallelism before CPU-heavy

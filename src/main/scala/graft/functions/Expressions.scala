@@ -1145,10 +1145,7 @@ object Expressions {
   def nearestCentroid(v: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): Column =
     column(NearestCentroid(expression(v), bc))
-  def extractMainContent(c: Column): Column =
-    column(ExtractMainContent(expression(c)))
   def extractAll(c: Column): Column = column(ExtractAll(expression(c)))
-  def sniffPayload(c: Column): Column = column(SniffPayload(expression(c)))
   def boundedMinK(c: Column, k: Int): Column =
     column(BoundedMinK(expression(c), k).toAggregateExpression())
   def cmsSketch(c: Column, depth: Int, width: Int): Column =

@@ -60,10 +60,6 @@ object TextFunctions {
   def hashedShinglesFromTokens(t: Column, n: Int): Column =
     Expressions.hashedWordNgrams(t, n, distinct = true)
 
-  /** Distinct word n-gram shingles of raw text (single-Project
-    * convenience; the token array is inlined into each gram slot). */
-  def shingles(c: Column, n: Int): Column = shinglesFromTokens(tokens(c), n)
-
   /** Stopword-marker language scores; deterministic argmax with fixed
     * tie-break order (alphabetical by language code). N-gram-style
     * heuristic language ID over marker lexicons. */
@@ -163,11 +159,6 @@ object TextFunctions {
       xxhash64((0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*)
     }: _*)
   }
-
-  /** MinHash signature of raw text (single-Project convenience; for
-    * anything followed by band hashing, stage via minhashSigFromTokens). */
-  def minhashSignature(c: Column, k: Int): Column =
-    minhashSigFromTokens(tokens(c), k) // native sig dedups internally
 
   /** LSH band keys from a pre-materialized signature column. */
   def bandKeysFromSig(sig: Column, k: Int, rows: Int): Column = {

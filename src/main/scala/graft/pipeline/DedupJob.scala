@@ -30,57 +30,57 @@ object DedupJob {
       outputRows: Long, buckets: Long, megaBucketsDropped: Long,
       docsInMegaBuckets: Long, durationSec: Double)
 
-  /** Shared run scaffolding for the Observation-accounted paths: run
-    * `body` against a fresh Observation, read the bucket metrics (an
-    * AQE-pruned CollectMetrics on an empty result reads as 0), write
-    * the disclosure row. `body` returns the run's output-row count. */
-  private def observedRun(spark: SparkSession, tableRoot: String,
-      operator: String, body: Observation => Long): DedupRunResult = {
+  /** Shared run scaffolding: time `body`, release the operators'
+    * single-scan caches, write the disclosure row. `body` returns
+    * (output_rows, buckets, mega_buckets_dropped, docs_in_mega_buckets). */
+  private def recordedRun(spark: SparkSession, tableRoot: String,
+      operator: String)(body: => (Long, Long, Long, Long)): DedupRunResult = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val obs = Observation(s"dedup-$runId")
     val t0 = System.nanoTime()
     // release the operators' single-scan caches when the run completes
     // (success or failure) — a long-lived driver running dedup over
     // changing inputs would otherwise accumulate one entry per input.
     // SCOPED: this drains only the relations THIS run persisted, so a
     // concurrent dedup job on another driver thread keeps its caches
-    val outputRows = Dedup.withCacheScope(body(obs))
-    val sec = (System.nanoTime() - t0) / 1e9
-    val row = obs.get
-    // sum() over an all-dropped/empty run observes SQL NULL, which
-    // arrives as Some(null) — match the boxed Long explicitly so the
-    // NULL-metric → 0 path is intentional, not a null-unboxing quirk
-    def m(k: String): Long = row.get(k) match {
-      case Some(v: java.lang.Long) => v.longValue()
-      case _ => 0L
+    val (outputRows, buckets, mega, docs) = Dedup.withCacheScope(body)
+    val res = DedupRunResult(runId, operator, outputRows, buckets, mega,
+      docs, (System.nanoTime() - t0) / 1e9)
+    ExtractionJob.writeMetrics(s"$tableRoot/dedup_metrics", runId) {
+      import spark.implicits._
+      Seq((res.runId, res.operator, res.outputRows, res.buckets,
+        res.megaBucketsDropped, res.docsInMegaBuckets, res.durationSec))
+        .toDF("run_id", "operator", "output_rows", "buckets",
+          "mega_buckets_dropped", "docs_in_mega_buckets", "duration_sec")
     }
-    val res = DedupRunResult(runId, operator, outputRows, m("buckets"),
-      m("mega_buckets_dropped"), m("docs_in_mega_buckets"), sec)
-    writeMetrics(spark, tableRoot, res)
     res
   }
 
   /** simhash / embedding / lsh near-dups: exact observation-based
     * accounting. The caller builds the pairs DataFrame against the
     * provided Observation (e.g. `Dedup.simhashPairs(df, "text", "id",
-    * maxHamming = 3, stats = Some(obs))`). */
+    * maxHamming = 3, stats = Some(obs))`). An all-dropped or empty run
+    * reads its bucket metrics as 0 ([[ExtractionJob.metric]]). */
   def runObserved(spark: SparkSession, tableRoot: String, operator: String,
-      build: Observation => DataFrame): DedupRunResult =
-    observedRun(spark, tableRoot, operator, obs => build(obs).count())
+      build: Observation => DataFrame): DedupRunResult = {
+    val obs = Observation()
+    recordedRun(spark, tableRoot, operator) {
+      val pairs = build(obs).count()
+      val row = obs.get
+      def m(k: String) = ExtractionJob.metric(row, k)
+      (pairs, m("buckets"), m("mega_buckets_dropped"),
+        m("docs_in_mega_buckets"))
+    }
+  }
 
   /** ngramJaccardPairs: accumulator-based accounting (the bucket-local
     * flatMapGroups path has no declarative aggregation to observe). */
   def runJaccard(spark: SparkSession, tableRoot: String, operator: String,
       build: Dedup.BucketAccounting => DataFrame): DedupRunResult = {
-    val runId = java.util.UUID.randomUUID().toString.take(8)
     val acc = Dedup.BucketAccounting(spark)
-    val t0 = System.nanoTime()
-    val pairs = Dedup.withCacheScope(build(acc).count())
-    val sec = (System.nanoTime() - t0) / 1e9
-    val res = DedupRunResult(runId, operator, pairs, -1L,
-      acc.megaBucketsDropped.value, acc.docsInMegaBuckets.value, sec)
-    writeMetrics(spark, tableRoot, res)
-    res
+    recordedRun(spark, tableRoot, operator) {
+      (build(acc).count(), -1L, acc.megaBucketsDropped.value,
+        acc.docsInMegaBuckets.value)
+    }
   }
 
   /** End-to-end content near-dedup over a document frame (the CLI's
@@ -93,7 +93,7 @@ object DedupJob {
   def runSimhashDedup(spark: SparkSession, tableRoot: String,
       docs: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3): DedupRunResult =
-    observedRun(spark, tableRoot, "simhash-cluster-dedup", { obs =>
+    runObserved(spark, tableRoot, "simhash-cluster-dedup", { obs =>
       import org.apache.spark.sql.functions.col
       val pairs = Dedup.simhashPairs(docs, textCol, idCol,
         maxHamming, stats = Some(obs))
@@ -101,24 +101,6 @@ object DedupJob {
         .filter(col("id") =!= col("cluster"))
         .select(col("id").as("drop_id"))
       drops.write.mode("overwrite").parquet(s"$tableRoot/dedup_drops")
-      spark.read.parquet(s"$tableRoot/dedup_drops").count()
+      spark.read.parquet(s"$tableRoot/dedup_drops")
     })
-
-  /** NEVER throws — a metrics write failure must not mask the dedup
-    * run's real outcome (the ExtractionJob.writeMetrics contract). */
-  private def writeMetrics(spark: SparkSession, tableRoot: String,
-      r: DedupRunResult): Unit =
-    try {
-      import spark.implicits._
-      Seq((r.runId, r.operator, r.outputRows, r.buckets,
-        r.megaBucketsDropped, r.docsInMegaBuckets, r.durationSec))
-        .toDF("run_id", "operator", "output_rows", "buckets",
-          "mega_buckets_dropped", "docs_in_mega_buckets", "duration_sec")
-        .write.mode("append").parquet(s"$tableRoot/dedup_metrics")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] dedup metrics write failed for run ${r.runId} " +
-            s"(result preserved): ${e.getMessage}")
-    }
 }

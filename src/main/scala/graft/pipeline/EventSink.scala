@@ -8,24 +8,19 @@ import org.apache.spark.sql.functions._
   * value = camelCase JSON with epoch-millis timestamps, flush barrier
   * before the watermark commit).
   *
-  * No kafka connector jar exists offline (SURVEY.md §7.1), so the
-  * default sink is a keyed parquet event log with identical (key,
-  * value) semantics; in production the same DataFrame writes through
-  * `format("kafka")` unchanged.
+  * No kafka connector jar exists offline (SURVEY.md §7.1), so
+  * [[EventSink.publish]] appends to a keyed parquet event log with
+  * identical (key, value) semantics; in production the same DataFrame
+  * writes through `format("kafka")` unchanged.
   */
-trait EventSink extends Serializable {
-  /** Durably append (key, value[, topic]) rows; must complete before
-    * the caller commits its watermark (the flush barrier). */
-  def publish(events: DataFrame, topic: String): Unit
-}
+object EventSink {
 
-final class ParquetEventSink(root: String) extends EventSink {
-  override def publish(events: DataFrame, topic: String): Unit =
+  /** Durably append (key, value, topic) rows to `<root>/events/<topic>`;
+    * must complete before the caller commits its watermark (the flush
+    * barrier). */
+  def publish(events: DataFrame, root: String, topic: String): Unit =
     events.withColumn("topic", lit(topic))
       .write.mode("append").parquet(s"$root/events/$topic")
-}
-
-object EventSink {
 
   /** Wire format: camelCase field names, timestamps as epoch millis,
     * nulls preserved — pinned by the reference's serializer goldens

@@ -48,50 +48,28 @@ object ExtractionJob {
     *                   METADATA_LAST_COLLECTION, application.yml:25-27)
     */
   def run(spark: SparkSession, turns: DataFrame, tableRoot: String,
-      system: String = "cs", mode: String = "ingest",
-      overrideWatermark: Option[String] = None,
-      nChunks: Int = 1, salt: Int = ExtractionPipeline.DefaultSalt,
-      numPartitions: Int = 0, sink: Option[EventSink] = None): JobResult = {
-
-    val t0 = System.nanoTime()
-    val store = new CheckpointStore(tableRoot)
+      system: String = "cs", overrideWatermark: Option[String] = None,
+      nChunks: Int = 1, salt: Int = ExtractionPipeline.DefaultSalt): JobResult = {
     val table = new SnapshotTable(tableRoot)
-    val eventSink = sink.getOrElse(new ParquetEventSink(tableRoot))
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-
-    // watermark read (must exist — seed at table creation); malformed
-    // or missing file fails the job before any work, Scenario-2 style
-    val wm0 = store.read(system, mode, overrideWatermark)
-
-    // chunk boundaries: ts quantiles over the fresh slice. Deliberately
-    // computed from the raw table with ONLY the watermark predicate —
-    // a column-pruned scan of `ts` alone (no payload column is touched,
-    // no join) — so this pre-pass stays cheap at 100 TB and cannot trip
-    // over a corrupt payload. Driver receives nChunks-1 doubles.
-    val bounds: Seq[Timestamp] =
-      if (nChunks <= 1) Seq.empty
-      else {
-        val probs = (1 until nChunks).map(_.toDouble / nChunks).toArray
-        turns.filter(col("ts") > lit(wm0))
-          .select(col("ts").cast("double").as("tsd"))
-          .stat.approxQuantile("tsd", probs, 0.001)
-          .map(d => new Timestamp((d * 1000).toLong)).toSeq
-      }
-    val ranges: Seq[(Option[Timestamp], Option[Timestamp])] = {
+    checkpointed(spark, tableRoot, system, "ingest",
+        overrideWatermark) { (wm0, runId) =>
+      // chunk boundaries: ts quantiles over the fresh slice. Deliberately
+      // computed from the raw table with ONLY the watermark predicate —
+      // a column-pruned scan of `ts` alone (no payload column is touched,
+      // no join) — so this pre-pass stays cheap at 100 TB and cannot trip
+      // over a corrupt payload. Driver receives nChunks-1 doubles.
+      val bounds: Seq[Timestamp] =
+        if (nChunks <= 1) Seq.empty
+        else {
+          val probs = (1 until nChunks).map(_.toDouble / nChunks).toArray
+          turns.filter(col("ts") > lit(wm0))
+            .select(col("ts").cast("double").as("tsd"))
+            .stat.approxQuantile("tsd", probs, 0.001)
+            .map(d => new Timestamp((d * 1000).toLong)).toSeq
+        }
       val los = None +: bounds.map(Some(_))
       val his = bounds.map(Some(_)) :+ None
-      los.zip(his)
-    }
-
-    var rowsRead = 0L
-    var rowsWritten = 0L
-    var committed = 0
-    var wm = wm0
-    val snapshots = scala.collection.mutable.ArrayBuffer.empty[String]
-    var error: Option[String] = None
-
-    ranges.zipWithIndex.takeWhile { case ((lo, hi), chunkIdx) =>
-      try {
+      los.zip(his).zipWithIndex.map { case ((lo, hi), chunkIdx) => () =>
         // ts-range slice FIRST, selection second: the range conjuncts
         // must evaluate before any payload-touching predicate (see
         // Selection.basePredicate ordering note)
@@ -108,35 +86,21 @@ object ExtractionJob {
         // commit pass (CollectMetrics nodes, no extra scan)
         val obsIn = Observation(s"chunk-$chunkIdx-in")
         val fresh = sliceRaw.filter(col("ts") > lit(wm0))
-          .observe(obsIn, count(lit(1)).as("rows_in"))
+          .observe(obsIn, count(lit(1)).as("rows"))
         val slice = Selection.ingest(fresh, wm0, spark)
         val obs = Observation(s"chunk-$chunkIdx")
         val extracted = ExtractionPipeline.repartitionForWrite(
-          ExtractionPipeline.extractExpr(spark, slice),
-          numPartitions, salt)
-          .observe(obs,
-            count(lit(1)).as("rows"),
-            max(col("ts")).as("max_ts"),
-            sum(length(col("extracted_text"))).as("chars_out"))
+          ExtractionPipeline.extractExpr(spark, slice), salt)
+          .observe(obs, count(lit(1)).as("rows"), max(col("ts")).as("max_ts"))
         val snapshotId = table.commit(extracted.toDF(),
           Seq("year", "month", "day"),
           Map("run-id" -> runId, "chunk" -> chunkIdx.toString,
-            "mode" -> mode, "system" -> system))
-        val row = obs.get
-        // AQE's empty-relation propagation can prune EITHER CollectMetrics
-        // node when a chunk has no fresh rows (Spark completes with an
-        // empty metrics row) — an absent metric means 0 rows scanned, not
-        // an error, so never index the map directly
-        val n = row.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-        rowsRead += obsIn.get.get("rows_in")
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        rowsWritten += n
-        if (n > 0) {
+            "mode" -> "ingest", "system" -> system))
+        Step(obs, obsIn, Some(snapshotId), () => {
           // ONE cached read of the just-committed snapshot feeds both
           // the lineage aggregation and the event publish (round 1
           // scanned the fresh output twice per chunk)
-          val committedRows = spark.read
-            .parquet(s"$tableRoot/data/$snapshotId")
+          val committedRows = table.deltaAt(spark, snapshotId)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             // per-output-partition lineage (PartitionLineage model):
@@ -162,43 +126,12 @@ object ExtractionJob {
             lineage.toDF().write.mode("append").parquet(s"$tableRoot/lineage")
             // keyed event publish (X3 analog) — the flush barrier: events
             // are durable before the watermark can advance
-            eventSink.publish(EventSink.keyedEvents(committedRows),
-              topic = s"$system-$mode")
+            EventSink.publish(EventSink.keyedEvents(committedRows),
+              tableRoot, s"$system-ingest")
           } finally committedRows.unpersist(blocking = false)
-        }
-        snapshots += snapshotId
-        // watermark := max ts of the committed chunk (A2 running-max,
-        // TxaKafkaItemWriter.java:52-79); empty chunk keeps prior wm
-        if (n > 0) {
-          // same pruning guard: a missing max_ts (cannot happen when
-          // n > 0 came from the same metrics row, but cheap to honor the
-          // contract) keeps the prior watermark instead of throwing
-          row.get("max_ts").foreach { v =>
-            wm = v match {
-              case t: Timestamp => t
-              case i: java.time.Instant => Timestamp.from(i)
-              case other => Timestamp.valueOf(other.toString)
-            }
-            store.write(system, mode, wm)
-          }
-        }
-        committed += 1
-        true
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          error = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-          false
+        })
       }
-    }.foreach(_ => ())
-
-    val durationSec = (System.nanoTime() - t0) / 1e9
-    val status = if (error.isEmpty) "COMPLETED" else "FAILED"
-    // run-level metrics row (A1/A3 analog of
-    // JobStartFinishListener.java:66-79 throughput logging)
-    writeMetrics(spark, tableRoot, runId, system, mode, status, rowsRead,
-      rowsWritten, committed, wm, durationSec)
-    JobResult(status, rowsRead, rowsWritten, committed, wm,
-      snapshots.toSeq, durationSec, error)
+    }
   }
 
   /** Delete-mode run (reference §3.2: reader → writer, no processor):
@@ -210,74 +143,123 @@ object ExtractionJob {
     */
   def runDelete(spark: SparkSession, tombstones: DataFrame,
       tableRoot: String, system: String = "cs",
-      overrideWatermark: Option[String] = None,
-      sink: Option[EventSink] = None): JobResult = {
-    import org.apache.spark.sql.expressions.Window
+      overrideWatermark: Option[String] = None): JobResult =
+    checkpointed(spark, tableRoot, system, "delete",
+        overrideWatermark) { (wm0, _) =>
+      Seq { () =>
+        import org.apache.spark.sql.expressions.Window
+        val selected = Selection.deleteLookback(tombstones, wm0)
+        // last-write-wins on the natural key: the lookback makes
+        // re-delivery idempotent
+        val w = Window.partitionBy(col("conv_id"), col("turn_idx"))
+          .orderBy(col("ts").desc)
+        val deduped = selected
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn")
+        val obs = Observation("delete")
+        EventSink.publish(EventSink.tombstones(
+          deduped.observe(obs, count(lit(1)).as("rows"),
+            max(col("ts")).as("max_ts"))), tableRoot, s"$system-delete")
+        // a delete run reports rows_read as its published row count
+        Step(obs, obs, None, () => ())
+      }
+    }
+
+  /** One unit of checkpointed work, after its data-moving action ran:
+    * `out` observed the written rows as (rows, max_ts), `in` the rows
+    * read (rows); `publish` runs only when the unit wrote rows, before
+    * the watermark advances past them. */
+  private final case class Step(out: Observation, in: Observation,
+      snapshotId: Option[String], publish: () => Unit)
+
+  /** The run loop both modes share: read the watermark (a missing or
+    * malformed file fails the job before any work, Scenario-2 style),
+    * then run the units `plan` builds from (watermark, run id) in order,
+    * advancing the watermark to each unit's max ts when it wrote rows
+    * (A2 running-max). The first failing unit stops the run: FAILED,
+    * watermark at the last committed unit. */
+  private def checkpointed(spark: SparkSession, tableRoot: String,
+      system: String, mode: String, overrideWatermark: Option[String])(
+      plan: (Timestamp, String) => Seq[() => Step]): JobResult = {
     val t0 = System.nanoTime()
     val store = new CheckpointStore(tableRoot)
-    val eventSink = sink.getOrElse(new ParquetEventSink(tableRoot))
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val wm0 = store.read(system, "delete", overrideWatermark)
-    try {
-      val selected = Selection.deleteLookback(tombstones, wm0)
-      // last-write-wins on the natural key: the lookback makes
-      // re-delivery idempotent
-      val w = Window.partitionBy(col("conv_id"), col("turn_idx"))
-        .orderBy(col("ts").desc)
-      val deduped = selected
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1).drop("rn")
-      val obs = Observation("delete")
-      val events = EventSink.tombstones(
-        deduped.observe(obs, count(lit(1)).as("rows"),
-          max(col("ts")).as("max_ts")))
-      eventSink.publish(events, topic = s"$system-delete")
-      val row = obs.get
-      // pruning guard (see the ingest path): empty selection may complete
-      // with an empty metrics row instead of rows=0
-      val n = row.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
-      val wm = if (n > 0) row.get("max_ts").map {
-        case t: Timestamp => t
-        case i: java.time.Instant => Timestamp.from(i)
-        case other => Timestamp.valueOf(other.toString)
-      }.getOrElse(wm0) else wm0
-      if (n > 0) store.write(system, "delete", wm)
-      val durationSec = (System.nanoTime() - t0) / 1e9
-      writeMetrics(spark, tableRoot, runId, system, "delete", "COMPLETED",
-        n, n, 1, wm, durationSec)
-      JobResult("COMPLETED", n, n, 1, wm, Seq.empty, durationSec, None)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        val durationSec = (System.nanoTime() - t0) / 1e9
-        writeMetrics(spark, tableRoot, runId, system, "delete", "FAILED",
-          0, 0, 0, wm0, durationSec)
-        JobResult("FAILED", 0, 0, 0, wm0, Seq.empty, durationSec,
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
-    }
-  }
+    val wm0 = store.read(system, mode, overrideWatermark)
 
-  /** Run-level metrics row (A1/A3). NEVER throws: a metrics/notification
-    * failure must not mask the job's real status — the reference's
-    * notification sender swallows its own failures the same way
-    * (SlackNotification.java:73-105 catches and logs rather than failing
-    * the batch). */
-  private def writeMetrics(spark: SparkSession, tableRoot: String,
-      runId: String, system: String, mode: String, status: String,
-      rowsRead: Long, rowsWritten: Long, chunks: Int, wm: Timestamp,
-      durationSec: Double): Unit =
-    try {
+    var rowsRead = 0L
+    var rowsWritten = 0L
+    var committed = 0
+    var wm = wm0
+    val snapshots = scala.collection.mutable.ArrayBuffer.empty[String]
+    var error: Option[String] = None
+
+    plan(wm0, runId).forall { unit =>
+      try {
+        val step = unit()
+        val (n, maxTs) = observed(step.out)
+        rowsRead += observed(step.in)._1
+        rowsWritten += n
+        if (n > 0) step.publish()
+        snapshots ++= step.snapshotId
+        if (n > 0) maxTs.foreach { t => store.write(system, mode, t); wm = t }
+        committed += 1
+        true
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          error = Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+          false
+      }
+    }
+
+    val durationSec = (System.nanoTime() - t0) / 1e9
+    val status = if (error.isEmpty) "COMPLETED" else "FAILED"
+    // run-level metrics row (A1/A3 analog of
+    // JobStartFinishListener.java:66-79 throughput logging)
+    writeMetrics(s"$tableRoot/metrics", runId) {
       import spark.implicits._
       val throughput = if (durationSec > 0) rowsWritten / durationSec else 0.0
-      Seq((runId, system, mode, status, rowsRead, rowsWritten, chunks,
+      Seq((runId, system, mode, status, rowsRead, rowsWritten, committed,
         wm, durationSec, throughput))
         .toDF("run_id", "system", "mode", "status", "rows_read",
           "rows_written", "chunks_committed", "watermark", "duration_sec",
           "turns_per_sec")
-        .write.mode("append").parquet(s"$tableRoot/metrics")
-    } catch {
+    }
+    JobResult(status, rowsRead, rowsWritten, committed, wm,
+      snapshots.toSeq, durationSec, error)
+  }
+
+  /** (rows, max_ts) of a filled Observation. */
+  private def observed(obs: Observation): (Long, Option[Timestamp]) = {
+    val row = obs.get
+    (metric(row, "rows"), row.get("max_ts").collect {
+      case t: Timestamp => t
+      case i: java.time.Instant => Timestamp.from(i)
+      case other if other != null => Timestamp.valueOf(other.toString)
+    })
+  }
+
+  /** A Long metric of an Observation row, 0 when absent or NULL: AQE's
+    * empty-relation propagation can prune the CollectMetrics node when
+    * nothing matched (Spark then completes with an empty metrics row),
+    * and sum() over no rows observes SQL NULL — both mean nothing was
+    * counted, not an error. */
+  private[pipeline] def metric(row: Map[String, Any], key: String): Long =
+    row.get(key) match {
+      case Some(v: java.lang.Long) => v.longValue()
+      case _ => 0L
+    }
+
+  /** Append one run-level metrics row to `path`. NEVER throws: a
+    * metrics/notification failure must not mask the run's real status —
+    * the reference's notification sender swallows its own failures the
+    * same way (SlackNotification.java:73-105 catches and logs rather
+    * than failing the batch). */
+  private[pipeline] def writeMetrics(path: String, runId: String)(
+      row: => DataFrame): Unit =
+    try row.write.mode("append").parquet(path)
+    catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] metrics write failed for run $runId (job status " +
-            s"$status preserved): ${e.getMessage}")
+        System.err.println(s"[graft] metrics write to $path failed for " +
+          s"run $runId (run result preserved): ${e.getMessage}")
     }
 }

@@ -132,11 +132,8 @@ object ExtractionPipeline {
     * straggler.
     */
   def repartitionForWrite(extracted: Dataset[ExtractedTurn],
-      numPartitions: Int = 0,
       salt: Int = DefaultSalt): Dataset[ExtractedTurn] = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else extracted.sparkSession.sessionState.conf.numShufflePartitions
+    val parts = extracted.sparkSession.sessionState.conf.numShufflePartitions
     extracted.repartition(parts, col("year"), col("month"), col("day"),
       col("conv_id"), pmod(col("turn_idx"), lit(salt)))
       // stable (conv_id, turn_idx) order inside every output file (O1):

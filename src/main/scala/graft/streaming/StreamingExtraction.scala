@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.model.{ExtractedTurn, Turn}
+import graft.model.ExtractedTurn
 import graft.pipeline.{ExtractionPipeline, Selection}
 
 /** Structured Streaming variant of the extraction pipeline: the same
@@ -16,9 +16,6 @@ import graft.pipeline.{ExtractionPipeline, Selection}
   */
 object StreamingExtraction {
 
-  val turnSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[Turn].schema
-
   /** Build the streaming extraction DataFrame from a parquet directory
     * source. Selection reuses the batch predicates (watermark literal =
     * job start floor; the stream's own event-time watermark handles
@@ -27,7 +24,7 @@ object StreamingExtraction {
   def extractionStream(spark: SparkSession, inputDir: String,
       since: Timestamp, lateness: String = "7 days"): Dataset[ExtractedTurn] = {
     val turns = spark.readStream
-      .schema(turnSchema)
+      .schema(graft.sources.TranscriptSource.TurnSchema)
       .option("maxFilesPerTrigger", "16")
       .parquet(inputDir)
     val eligible = Selection.ingest(turns, since, spark)

@@ -41,6 +41,11 @@ final class SnapshotTable(val root: String) {
     else None
   }
 
+  /** True when the committed view holds data: a table with no commit,
+    * or whose commits all wrote zero rows, reads as a 0-column empty
+    * frame. */
+  def hasData: Boolean = currentSnapshotId.exists(dataPaths(_).nonEmpty)
+
   /** Commit `df` as a new snapshot on top of the current one. Data
     * lands fully before any metadata becomes visible. Returns the
     * snapshot id.

@@ -65,4 +65,16 @@ class ReliableCheckpointSpec extends SparkSpec {
     val again = relDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == expect)
   }
+
+  test("no checkpoint dir: temp-dir fallback in local mode only, a cluster fails fast") {
+    assert(Exec.checkpointDir(Some("hdfs://nn/ckpt"), isLocal = false,
+      fail("a configured dir needs no temp dir")) == "hdfs://nn/ckpt")
+    assert(Exec.checkpointDir(None, isLocal = true, "/tmp/graft-ckpt-x") ==
+      "/tmp/graft-ckpt-x")
+    val e = intercept[IllegalStateException] {
+      Exec.checkpointDir(None, isLocal = false,
+        fail("a cluster must not fall back to a driver-local dir"))
+    }
+    assert(e.getMessage.contains(Exec.CheckpointDirKey))
+  }
 }

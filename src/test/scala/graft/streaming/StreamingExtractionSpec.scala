@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.fixtures.TranscriptGen
 import graft.fixtures.TranscriptGen.GenConfig
+import graft.sources.TranscriptSource
 
 class StreamingExtractionSpec extends SparkSpec {
 
@@ -75,7 +76,7 @@ class StreamingExtractionSpec extends SparkSpec {
         null.asInstanceOf[String], "toolB", ts(7)))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
       .write.mode("append").parquet(in)
-    val stream = spark.readStream.schema(StreamingExtraction.turnSchema)
+    val stream = spark.readStream.schema(TranscriptSource.TurnSchema)
       .option("maxFilesPerTrigger", "1").parquet(in)
     val q = StreamingExtraction.dedupByContentStream(stream)
       .writeStream.format("parquet")
@@ -86,7 +87,7 @@ class StreamingExtractionSpec extends SparkSpec {
     q.awaitTermination(120000)
     val result = spark.read.parquet(out)
     assert(result.columns.sorted.sameElements(
-      StreamingExtraction.turnSchema.fieldNames.sorted),
+      TranscriptSource.TurnSchema.fieldNames.sorted),
       "fingerprint staging column never reaches the sink schema")
     val got = result.select("conv_id")
       .collect().map(_.getString(0)).filter(_ != null).toSet
