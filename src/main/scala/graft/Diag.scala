@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * Diag plans   <sfDir> <outDir> <suffix> <prefix>... explain("formatted") → <outDir>/<query>_<suffix>.txt
   * Diag audit   <sfDir>                               physical-plan audit (PLANS.md)
   * Diag host                                          5-second host probe; exit 0 clean, 1 contended
+  * Diag scaling <level> <nConvs> <reps> <paraScale>   one parallelism level's extraction timing (tools/scaling.sh)
   * }}}
   *
-  * Query names match by prefix over [[SparkEntry.queries]]. The Spark
+  * Query names match by prefix over [[SparkEntry.queries]]. The query
   * subcommands share one [[Bench.session]] at `SPARK_GRAFT_CPUS`
-  * (default 32) and Bench's cold-state sweep before every query.
+  * (default 32) and Bench's cold-state sweep before every query;
+  * `scaling` owns its sessions, one at `<level>`.
   */
 object Diag {
 
@@ -29,9 +31,12 @@ object Diag {
       withSession(plans(_, sfDir, outDir, suffix, matching(prefixes)))
     case "audit" :: sfDir :: _ => withSession(audit(_, sfDir))
     case "host" :: _ => sys.exit(if (host()) 0 else 1)
+    case "scaling" :: level :: nConvs :: reps :: paraScale :: Nil =>
+      scaling(level, nConvs.toInt, reps.toInt, paraScale.toInt)
     case _ =>
       System.err.println("usage: graft.Diag profile <sfDir> <prefix>... | " +
-        "plans <sfDir> <outDir> <suffix> <prefix>... | audit <sfDir> | host")
+        "plans <sfDir> <outDir> <suffix> <prefix>... | audit <sfDir> | host | " +
+        "scaling <level> <nConvs> <reps> <paraScale>")
       sys.exit(2)
   }
 
@@ -76,6 +81,12 @@ object Diag {
     def record[T](body: => T): T = {
       stages.clear(); on = true
       try body finally on = false
+    }
+
+    /** Task seconds summed over every stage of the last [[record]]. */
+    def taskSec: Double = {
+      import scala.jdk.CollectionConverters._
+      stages.values.asScala.map(_.taskMs).sum / 1e3
     }
 
     /** Completed stages, longest wall first. */
@@ -394,6 +405,70 @@ object Diag {
     }
     walk(plan)
     scans.toSeq
+  }
+
+  // ---- scaling ----------------------------------------------------------
+
+  /** One parallelism level of the N→4N scaling evidence (BASELINE.json
+    * north rule; `tools/scaling.sh` runs one fresh JVM per level, since
+    * same-JVM SparkContext churn contaminates cross-level timings, and
+    * `tools/scaling_report.py` assembles BENCH/BASELINE.md from the
+    * lines). The input is materialized once in a prep session at 16
+    * (generation would otherwise dominate allocation); warm-up and reps
+    * then run in ONE session at `level`, because every new SparkSession
+    * loads codegen/lambda classes through a fresh classloader and resets
+    * JIT profiles (observed 158 s → 25 s → 8.8 s across fresh sessions in
+    * one JVM), while within a session steady state arrives by rep 2.
+    * Each rep is [[Bench.timeExtract]]; reps where CPU not attributable
+    * to this JVM exceeds half a core are rejected. Prints one JSON line:
+    * the fastest clean rep's rows, seconds and task seconds (the
+    * report's work-inflation × utilization decomposition), every clean
+    * rep's seconds and the attempt count. */
+  private def scaling(level: String, nConvs: Int, reps: Int, paraScale: Int): Unit = {
+    val prep = Bench.session("16")
+    prep.sparkContext.setLogLevel("ERROR")
+    try Bench.materializeInput(prep, nConvs, paraScale) finally prep.stop()
+    val spark = Bench.session(level)
+    spark.sparkContext.setLogLevel("ERROR")
+    val rec = new StageRecorder
+    spark.sparkContext.addSparkListener(rec)
+    def once(): (Double, Double) = Bench.timeExtract(spark, nConvs, paraScale)
+
+    def measured(): Option[(Double, Double, Double)] = {
+      val b0 = HostProbe.busyJiffies()
+      val my0 = HostProbe.processCpuNanos()
+      val g0 = HostProbe.gcMillis()
+      val t0 = System.nanoTime()
+      val (r, wall, my1, b1) = rec.record {
+        val r = once()
+        val wall = (System.nanoTime() - t0) / 1e9
+        val sample = (r, wall, HostProbe.processCpuNanos(), HostProbe.busyJiffies())
+        Thread.sleep(200) // the listener bus is asynchronous: let the rep's events land
+        sample
+      }
+      val mySec = (my1 - my0) / 1e9
+      val gcSec = (HostProbe.gcMillis() - g0) / 1e3
+      val otherCores = HostProbe.foreignCores(b0, b1, my0, my1, wall)
+      val taskSec = rec.taskSec
+      // per-rep attribution: how many cores the job actually used and
+      // how much of the window went to GC
+      System.err.println(f"[scaling] rep wall=$wall%.3f cpuCores=${mySec / wall}%.1f gcSec=$gcSec%.2f otherCores=$otherCores%.1f taskSec=$taskSec%.1f")
+      if (otherCores > 0.5) {
+        System.err.println(f"[scaling] rep rejected: external load $otherCores%.1f cores")
+        None
+      } else Some((r._1, r._2, taskSec))
+    }
+    val clean = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
+    var attempts = 0
+    try {
+      once(); once() // warmup to C2 steady state
+      while (clean.length < reps && attempts < reps * 5) {
+        measured().foreach(clean += _); attempts += 1
+      }
+    } finally spark.stop()
+    require(clean.nonEmpty, "no clean reps — host too noisy")
+    val (rows, sec, taskSec) = clean.minBy(_._2)
+    println(f"""{"level":$level,"rows":$rows%.0f,"sec":$sec%.3f,"task_sec":$taskSec%.3f,"all":[${clean.map(r => f"${r._2}%.3f").mkString(",")}],"attempts":$attempts}""")
   }
 
   // ---- host -------------------------------------------------------------

@@ -1,7 +1,7 @@
 package graft
 
-/** Host-attribution instruments shared by [[Bench]] and
-  * [[ScalingBench]] — one implementation so the two benches' noise
+/** Host-attribution instruments shared by [[Bench]], [[Diag]] and the
+  * benchmark under `perfbench/` — one implementation so their noise
   * verdicts stay comparable by construction (separate copies of the
   * jiffy parse / MXBean casts would drift independently).
   *

@@ -225,6 +225,7 @@ object Corpus {
         expr("150000000000 div nv").as("t15"))
       .persist(StorageLevel.MEMORY_AND_DISK))
     var pr = base.select(col("v"), col("deg"), col("pr0").as("pr"))
+    var checkpointed: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val agg = sym
         .join(pr.select(col("v").as("src"), expr("pr div deg").as("c")),
@@ -238,8 +239,14 @@ object Corpus {
       // deep power iteration (not the iters=3 default) grows the
       // iterate's lineage without bound — truncate every 8 rounds
       // (local or reliable per Exec.iterCheckpoint; values are exact
-      // integers, so a checkpointed iterate is bit-identical)
-      if (i % 8 == 0 && i < iters) pr = Exec.iterCheckpoint(pr, eager = true)
+      // integers, so a checkpointed iterate is bit-identical). Once the
+      // new checkpoint has materialized, the previous one is never read
+      // again — free it; only the latest backs the returned frame.
+      if (i % 8 == 0 && i < iters) {
+        pr = Exec.iterCheckpoint(pr, eager = true)
+        checkpointed.foreach(Exec.freeLocalCheckpoint)
+        checkpointed = Some(pr)
+      }
     }
     pr
   }

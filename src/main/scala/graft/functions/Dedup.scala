@@ -657,7 +657,7 @@ object Dedup {
         // which the CacheManager doesn't track), so the checkpointed RDD
         // behind the plan's LogicalRDD leaf is unpersisted directly —
         // safe ONLY because the superseded table is never read again.
-        freeLocalCheckpoint(labels)
+        Exec.freeLocalCheckpoint(labels)
         // min-propagation labels only ever decrease, so label < old is
         // exactly "changed this round"; the probe short-circuits on the
         // first changed row of the cached table
@@ -769,7 +769,7 @@ object Dedup {
       .select(explode(array(col("a"), col("b"))).as("id"))
       .distinct(), eager = true)
     // both derivations materialized — the upstream checkpoint is dead
-    freeLocalCheckpoint(p)
+    Exec.freeLocalCheckpoint(p)
     var converged = false
     var iter = 0
     try {
@@ -786,7 +786,7 @@ object Dedup {
         val (next, nfp) = checkpointWithFp(smallStar(ls))
         // superseded sets — next is materialized, neither is read again
         ls.unpersist(blocking = false)
-        freeLocalCheckpoint(e)
+        Exec.freeLocalCheckpoint(e)
         e = next
         converged = nfp == fp
         fp = nfp
@@ -799,8 +799,8 @@ object Dedup {
         // failure path: nothing will ever read these — free the
         // eagerly-materialized blocks instead of pinning them for the
         // driver's lifetime (Verify/bench catch per-query failures)
-        freeLocalCheckpoint(e)
-        freeLocalCheckpoint(nodes)
+        Exec.freeLocalCheckpoint(e)
+        Exec.freeLocalCheckpoint(nodes)
         throw t
     }
     // fixpoint edges are (member → root); roots have no outgoing edge
@@ -812,15 +812,4 @@ object Dedup {
         coalesce(col("r"), col("id")).as("cluster"))
   }
 
-  /** Release the block-manager storage behind a `localCheckpoint(true)`
-    * Dataset. Must only be called on a table that will NEVER be read
-    * again: local checkpointing truncates lineage, so the persisted
-    * blocks ARE the data — unpersisting them makes the Dataset
-    * unrecomputable by design. */
-  private def freeLocalCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -39,6 +39,19 @@ object Exec {
       df.checkpoint(eager)
     }
 
+  /** Release the block-manager storage behind an [[iterCheckpoint]]
+    * Dataset. Must only be called on a table that will NEVER be read
+    * again: local checkpointing truncates lineage, so the persisted
+    * blocks ARE the data — unpersisting them makes the Dataset
+    * unrecomputable by design. A reliable checkpoint is not persisted:
+    * its files stay in the checkpoint dir and this is a no-op. */
+  private[functions] def freeLocalCheckpoint(ds: DataFrame): Unit =
+    ds.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** Reliable-checkpoint directory for a session that has none: the
     * [[CheckpointDirKey]] value, else `tempDir` — but only in local
     * mode, where driver and executors share one disk. On a cluster a

@@ -35,11 +35,6 @@ final case class Turn(
     ts: Timestamp
 )
 
-/** One extracted layout span (PDF path) or content block (HTML path).
-  * Ordered by `span_idx` within a turn.
-  */
-final case class Span(span_idx: Int, text: String, x: Double, y: Double)
-
 /** Output row of the extraction pipeline: cleaned main-content text per
   * (conv_id, turn_idx), plus lineage columns. `payload_kind` is the
   * sniffed type (html|pdf|plain); date parts drive the partitioned

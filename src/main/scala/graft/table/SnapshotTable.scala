@@ -99,7 +99,7 @@ final class SnapshotTable(val root: String) {
     withCommitLock(dataPath) { stillHeld =>
       requireParentOrCleanup(expectedParent, dataPath)
       val json = snapshotJson(snapshotId, dataPath, paths, files, summary)
-      val manifest = metaDir.resolve(s"snapshot-$snapshotId.json")
+      val manifest = manifestPath(snapshotId)
       Files.write(manifest, json.getBytes(StandardCharsets.UTF_8))
       // per-WRITER tmp name: a shared "current.tmp" would let this
       // writer's abort-cleanup delete a concurrent usurper's in-flight
@@ -396,7 +396,7 @@ final class SnapshotTable(val root: String) {
       val dir = Paths.get(root, "data", id)
       if (!live.contains(dir.toString) && Files.exists(dir))
         deleteRecursively(dir)
-      Files.deleteIfExists(metaDir.resolve(s"snapshot-$id.json"))
+      Files.deleteIfExists(manifestPath(id))
     }
     expired
   }
@@ -415,28 +415,22 @@ final class SnapshotTable(val root: String) {
       .findAllMatchIn(raw).map(m => m.group(1) -> m.group(2)).toMap
   }
 
-  /** Cumulative non-empty data directories of a committed snapshot.
-    * Falls back to the legacy single `data-path` key (manifests written
-    * before cumulative commits) so old tables read their own delta
-    * instead of silently reading as empty. */
+  /** Cumulative non-empty data directories of a committed snapshot. A
+    * manifest without a `data-paths` list is corrupt and fails loudly
+    * rather than reading as some other set of files. */
   def dataPaths(id: String): Seq[String] = {
     val raw = manifest(id)
-    """"data-paths"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw) match {
-      case Some(m) =>
-        """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-          .map(g => unescape(g.group(1))).toSeq
-      case None =>
-        """"data-path"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(raw)
-          .map(m => unescape(m.group(1)))
-          .filter(p => listParquet(Paths.get(p)).nonEmpty)
-          .toSeq
-    }
+    val m = """"data-paths"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw)
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot manifest ${manifestPath(id)} has no data-paths list"))
+    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
+      .map(g => unescape(g.group(1))).toSeq
   }
 
-  private def manifest(id: String): String = {
-    val p = metaDir.resolve(s"snapshot-$id.json")
-    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-  }
+  private def manifestPath(id: String) = metaDir.resolve(s"snapshot-$id.json")
+
+  private def manifest(id: String): String =
+    new String(Files.readAllBytes(manifestPath(id)), StandardCharsets.UTF_8)
 
   private def unescape(s: String): String =
     s.replace("\\\"", "\"").replace("\\\\", "\\")

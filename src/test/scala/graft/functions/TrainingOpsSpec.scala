@@ -241,6 +241,31 @@ class TrainingOpsSpec extends SparkSpec {
     Dedup.releaseCaches()
   }
 
+  test("pagerank: deep iteration frees superseded checkpoints, keeps the exact iterate") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L), (6L, 7L))
+    def checkpointed = spark.sparkContext.getPersistentRDDs.values
+      .filter(_.isCheckpointed).map(_.id).toSet
+    val before = checkpointed
+    // 24 rounds truncate lineage at rounds 8 and 16
+    val out = Corpus.pagerank(pairs.toDF("sa", "sb"), iters = 24)
+    val live = checkpointed -- before
+    assert(live.size == 1,
+      s"only the round-16 checkpoint behind the result stays persisted: $live")
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    // the untruncated iterate: the same integer fixed point in plain Scala
+    val nbrs = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    val n = nbrs.size.toLong
+    var pr = nbrs.keys.map(_ -> 1000000000000L / n).toMap
+    for (_ <- 1 to 24) {
+      val sc = nbrs.toSeq.flatMap { case (u, vs) => vs.map(_ -> pr(u) / vs.size) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      pr = nbrs.keys.map(v => v -> (150000000000L / n + 85 * sc(v) / 100)).toMap
+    }
+    assert(got == pr)
+    Dedup.releaseCaches()
+  }
+
   test("containmentPairs: embedded doc reads ~1.0 on its side, low on the host's") {
     import spark.implicits._
     // k=2. Doc 1 ("x y z") is fully embedded in doc 2; doc 3 unrelated.

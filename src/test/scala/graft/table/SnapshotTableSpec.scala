@@ -67,6 +67,22 @@ class SnapshotTableSpec extends SparkSpec {
     assert(t2.read(spark).count() == 0)
   }
 
+  test("a manifest without data-paths fails loudly, naming the file") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("snap-")
+    val t = new SnapshotTable(root)
+    val s1 = t.commit(Seq((1, "a")).toDF("k", "v"), Seq.empty)
+    val manifest = Paths.get(root, "metadata", s"snapshot-$s1.json")
+    val raw = new String(Files.readAllBytes(manifest), UTF_8)
+    // drop the list; the single `data-path` key is still there
+    val stripped = raw.replaceFirst(""""data-paths"\s*:\s*\[[^\]]*\],""", "")
+    assert(stripped != raw && stripped.contains("\"data-path\""))
+    Files.write(manifest, stripped.getBytes(UTF_8))
+    val ex = intercept[IllegalStateException](t.dataPaths(s1))
+    assert(ex.getMessage.contains(manifest.toString), ex.getMessage)
+  }
+
   test("compaction rewrites the view into one dir; expiry reclaims dirs") {
     val root = tmpDir("snap-")
     val t = new SnapshotTable(root)

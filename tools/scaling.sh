@@ -1,7 +1,7 @@
 #!/bin/bash
-# Scaling bench orchestrator: one fresh JVM per parallelism level;
-# warmup + reps run inside one SparkSession per JVM (fresh sessions
-# reset JIT profiles via new classloaders). 8g heap — large heaps make
+# Scaling bench orchestrator: one fresh JVM per parallelism level
+# (graft.Diag scaling); warmup + reps run inside one SparkSession per
+# JVM (fresh sessions reset JIT profiles via new classloaders). 8g heap — large heaps make
 # G1 pathological for this allocation profile (measured 100s+ at 24g
 # vs 2s at 8g, level 16). Usage: tools/scaling.sh [nConvs] [reps]
 # AMORT_CONVS (default 90000, 0 to skip) adds the fixed-cost
@@ -19,10 +19,9 @@ run_levels() { # $1=convs $2=reps $3=outfile $4=required(1|0)
   for LVL in 4 8 16 32; do
     echo "[scaling] convs=$1 level $LVL..." >&2
     before=$(wc -l < "$3")
-    GRAFT_XMX=8g SPARK_GRAFT_BENCH_LEVEL=$LVL SPARK_GRAFT_BENCH_CONVS=$1 \
-      SPARK_GRAFT_BENCH_PARASCALE=${PARASCALE:-16} \
-      SPARK_GRAFT_BENCH_REPS=$2 MAIN=graft.ScalingBench \
-      tools/run_verify.sh x y 2>/dev/null | grep -E '^\{' >> "$3" || true
+    GRAFT_XMX=8g MAIN=graft.Diag \
+      tools/run_verify.sh scaling $LVL $1 $2 ${PARASCALE:-16} \
+      2>/dev/null | grep -E '^\{' >> "$3" || true
     if [ "$(wc -l < "$3")" = "$before" ]; then
       # a missing level must be LOUD (a silent gap crashes the report
       # with a bare KeyError after the expensive microbenches ran);
